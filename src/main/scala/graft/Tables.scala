@@ -1,8 +1,13 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Catalog of the driver-provided testdata tables (TESTDATA.md).
   *
@@ -22,9 +27,66 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Read one entity table from a scale-factor dir. */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Read one entity table from a scale-factor dir.
+    *
+    * A bare `spark.read.parquet(file)` infers the schema with a one-task
+    * Spark job that reads the footer, on every call — one job per table
+    * per query, for tables that never change under a run. So the schema
+    * Spark infers for a table FILE is memoized, and every read is
+    * `spark.read.schema(memo).parquet(file)`: the first read of a file
+    * infers once, every later one launches no job. Each call still
+    * builds a fresh relation with fresh expression ids, so self-joins
+    * behave as with the bare read.
+    *
+    * The memo keys on what the inferred schema depends on: the qualified
+    * path, the file's length and modification time (a rewritten file
+    * gets its own entry), and the session's explicitly set confs whose
+    * key contains `parquet` (`nanosAsLong`, `binaryAsString`,
+    * `inferTimestampNTZ`, …: a session that would infer differently
+    * gets its own entry). It is deliberately NOT session-scoped: the
+    * value is a plain `StructType`, holding no session, DataFrame or
+    * data, so sessions that would infer the same schema share it and a
+    * stopped session leaves nothing behind but the schema.
+    *
+    * A directory-valued (or missing) path keeps the bare read, so its
+    * schema and errors are exactly Spark's.
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    fileSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+  }
+
+  /** The schema [[t]] reads `name` with, without building a relation —
+    * for stream sources, which must be handed their schema up front. */
+  def schema(spark: SparkSession, dir: String, name: String): StructType = {
+    val path = s"$dir/$name.parquet"
+    fileSchema(spark, path).getOrElse(spark.read.parquet(path).schema)
+  }
+
+  private case class FileKey(path: String, length: Long, modified: Long,
+                             parquetConfs: Seq[(String, String)])
+
+  private val inferred = new ConcurrentHashMap[FileKey, StructType]()
+
+  /** The memoized inferred schema of a parquet FILE (see [[t]]); None for
+    * a directory or a missing path. */
+  private def fileSchema(spark: SparkSession, path: String)
+  : Option[StructType] = {
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p))
+      catch { case _: FileNotFoundException => None }
+    status.filter(_.isFile).map { st =>
+      val key = FileKey(st.getPath.toString, st.getLen,
+        st.getModificationTime,
+        spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted)
+      inferred.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    }
+  }
 
   /** `events` with a usable TimestampType `ts`, whatever the file stored.
     *

@@ -1112,35 +1112,39 @@ object Graph {
   def landmarkDistances(edges: DataFrame, srcCol: String, dstCol: String,
                         seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).persist() // NOT stage(): a checkpoint ERASES outputPartitioning and every round would re-exchange the E-row edge list (the eDeg idiom)
     var settled = seeds.select(col("node").cast("long").as("node"))
       .distinct()
       .select(col("node").as("lm"), col("node"), lit(0).as("hops"))
       .stage()
     if (settled.isEmpty) return settled
-    var frontier = settled
-    var hop = 0
-    while (hop < maxHops) {
-      val reached = e.join(frontier.select(col("lm"),
-          col("node").as("src")).hint("shuffle_hash"), Seq("src"))
-        .select(col("lm"), col("dst").as("node")).distinct()
-        .join(settled.select("lm", "node"), Seq("lm", "node"),
-          "left_anti")
-        .select(col("lm"), col("node"), lit(hop + 1).as("hops"))
-      val (stagedFrontier, row) = graft.Staging.stageObserved(reached,
-        count(lit(1)).as("n_new"))
-      frontier = stagedFrontier
-      if (row("n_new").asInstanceOf[Long] == 0L) {
-        log.info(s"landmarkDistances: frontier empty after ${hop + 1} " +
-          s"rounds (cap $maxHops)")
-        return settled
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+      .repartition(col("src")).persist() // NOT stage(): a checkpoint ERASES outputPartitioning and every round would re-exchange the E-row edge list (the eDeg idiom)
+    // every frame returned below is staged, so the E-row edge list is
+    // released on both exits
+    try {
+      var frontier = settled
+      var hop = 0
+      while (hop < maxHops) {
+        val reached = e.join(frontier.select(col("lm"),
+            col("node").as("src")).hint("shuffle_hash"), Seq("src"))
+          .select(col("lm"), col("dst").as("node")).distinct()
+          .join(settled.select("lm", "node"), Seq("lm", "node"),
+            "left_anti")
+          .select(col("lm"), col("node"), lit(hop + 1).as("hops"))
+        val (stagedFrontier, row) = graft.Staging.stageObserved(reached,
+          count(lit(1)).as("n_new"))
+        frontier = stagedFrontier
+        if (row("n_new").asInstanceOf[Long] == 0L) {
+          log.info(s"landmarkDistances: frontier empty after ${hop + 1} " +
+            s"rounds (cap $maxHops)")
+          return settled
+        }
+        settled = settled.unionAll(frontier).stage()
+        hop += 1
       }
-      settled = settled.unionAll(frontier).stage()
-      hop += 1
-    }
-    settled
+      settled
+    } finally e.unpersist()
   }
 
   /** Multi-source BFS hop distance: the minimum number of directed

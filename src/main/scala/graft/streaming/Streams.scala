@@ -38,6 +38,15 @@ object Streams {
       case _ => df
     }
 
+  /** Schema of the event files `glob` selects in `dir`. The default glob
+    * names the single events table, whose schema [[graft.Tables.schema]]
+    * has memoized; any other glob (the specs' multi-file dirs) is
+    * inferred from the files it selects. */
+  private def eventsSchema(sess: SparkSession, dir: String, glob: String)
+  : org.apache.spark.sql.types.StructType =
+    if (glob == "events.parquet") graft.Tables.schema(sess, dir, "events")
+    else sess.read.option("pathGlobFilter", glob).parquet(dir).schema
+
   /** Stateful queries keep one state store PER shuffle partition per
     * stateful operator (a stream-stream join keeps four), and every
     * store checkpoints delta files each micro-batch — so the per-batch
@@ -79,8 +88,7 @@ object Streams {
                     statePartitions: Int = 0): DataFrame = {
     val sess = statefulSession(spark, statePartitions)
     // ts arrives as nanosecond longs (see Tables.events); convert exactly.
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
+    val schema = eventsSchema(sess, dir, glob)
     val stream = sess.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -159,8 +167,7 @@ object Streams {
                  statePartitions: Int = 0,
                  valueExpr: Column = col("value")): DataFrame = {
     val sess = statefulSession(spark, statePartitions)
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
+    val schema = eventsSchema(sess, dir, glob)
     val stream = sess.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -211,8 +218,7 @@ object Streams {
                             valueExpr: Column = col("value"))
   : (DataFrame, Long) = {
     val sess = statefulSession(spark, statePartitions)
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
+    val schema = eventsSchema(sess, dir, glob)
     val stream = sess.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -268,7 +274,7 @@ object Streams {
                   statePartitions: Int = 0,
                   rocksDb: Boolean = false): DataFrame = {
     val sess = statefulSession(spark, statePartitions, rocksDb)
-    val schema = sess.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(sess, dir, "events")
     val deduped = normalizeTs(sess.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -318,7 +324,7 @@ object Streams {
                  rocksDb: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val sess = statefulSession(spark, statePartitions, rocksDb)
-    val schema = sess.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(sess, dir, "events")
     val counts = normalizeTs(sess.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -365,8 +371,7 @@ object Streams {
   def cmsStream(spark: SparkSession, dir: String, checkpoint: String,
                 keyCol: String, depth: Int, width: Int,
                 glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
+    val schema = eventsSchema(spark, dir, glob)
     val cells = normalizeTs(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -402,8 +407,7 @@ object Streams {
                            checkpoint: String, valueExpr: Column,
                            s: Int, glob: String = "events.parquet")
   : DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
+    val schema = eventsSchema(spark, dir, glob)
     val lo = graft.ops.qsketch.bucketLo(valueExpr, s)
     val buckets = normalizeTs(spark.readStream
         .schema(schema)
@@ -447,8 +451,7 @@ object Streams {
                            keyCol: String, fromCol: String,
                            toCol: String,
                            glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
+    val schema = eventsSchema(spark, dir, glob)
     val enriched = normalizeTs(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -476,10 +479,9 @@ object Streams {
   def enrichStream(spark: SparkSession, dir: String, checkpoint: String,
                    glob: String = "events.parquet",
                    dimDir: String = null): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
-    val dim = spark.read
-      .parquet(s"${if (dimDir == null) dir else dimDir}/nation.parquet")
+    val schema = eventsSchema(spark, dir, glob)
+    val dim = graft.Tables.t(spark, if (dimDir == null) dir else dimDir,
+        "nation")
       .select(col("n_nationkey"), col("n_name"))
     val joined = spark.readStream
       .schema(schema)
@@ -528,8 +530,7 @@ object Streams {
     // count is baked into the checkpoint on first run either way, so it
     // is a per-pipeline knob, not a global.
     val sess = statefulSession(spark, statePartitions)
-    val schema = sess.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
+    val schema = eventsSchema(sess, dir, glob)
     // each type filter also passes its side's punctuation rows: the
     // optimizer pushes the filter BELOW the EventTimeWatermark operator
     // into the scan (verified via the checkpoint's batchWatermarkMs —
@@ -752,8 +753,7 @@ object Streams {
                           checkpoint: String, tablePath: String,
                           keys: Seq[String], versionCol: String,
                           glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
+    val schema = eventsSchema(spark, dir, glob)
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -792,8 +792,7 @@ object Streams {
                      goodPath: String, badPath: String,
                      pred: org.apache.spark.sql.Column,
                      glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
+    val schema = eventsSchema(spark, dir, glob)
     val stream = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -1446,8 +1445,8 @@ object Streams {
     val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
     val schema = docs.schema
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-    val emb = spark.read.parquet(
-      embPath.getOrElse(s"$dir/embeddings.parquet"))
+    val emb = embPath.fold(graft.Tables.t(spark, dir, "embeddings"))(
+      spark.read.parquet(_))
     // ---- seed the three stores, once: built from the corpus slice,
     // or restored from the shared prebuilt snapshots by file copy
     // (kernel-by-kernel, exactly the single-stream restore paths —
@@ -1688,7 +1687,7 @@ object Streams {
   private def sessionEventStream(sess: SparkSession, dir: String)
   : Dataset[SessionEvent] = {
     import sess.implicits._
-    val schema = sess.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(sess, dir, "events")
     normalizeTs(sess.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -1768,8 +1767,7 @@ object Streams {
   def markovStream(spark: SparkSession, dir: String, checkpoint: String,
                    glob: String = "events.parquet"): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
+    val schema = eventsSchema(spark, dir, glob)
     val steps = normalizeTs(spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -50,6 +50,16 @@ object SuffixArray {
     * and at lake scale the saved rounds are saved corpus shuffles. */
   private val initSpan = 16
 
+  /** The per-doc `lead()` offset of a doubling round: `lead()` takes an
+    * Int, and a wrapped offset would silently pair the wrong suffixes —
+    * documents past 2³¹ tokens need the shift-join form instead. */
+  private[text] def leadOffset(covered: Long): Int = {
+    require(covered <= Int.MaxValue,
+      s"suffix array: a span of $covered tokens exceeds lead()'s Int " +
+        "offset; documents past 2^31 tokens are not supported")
+    covered.toInt
+  }
+
   /** Final prefix-doubling equivalence ranks: (doc_id, pos, r) where
     * r is equal iff the full suffixes are equal token sequences, and
     * r's order IS lexicographic suffix order. Rounds run until either
@@ -107,12 +117,10 @@ object SuffixArray {
       // ONE per-doc lead() window over the already-doc-partitioned
       // staged frame (no exchange, one in-partition sort) where the
       // shift self-join paid two sorts + a merge join per round.
-      // (lead() needs an Int offset; doc lengths past 2³¹ would need
-      // the join form back — no corpus has 2-billion-token documents.)
       val wDoc = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("pos"))
       val paired = cur.select(col("doc_id"), col("pos"), col("r"),
-        coalesce(lead(col("r"), covered.toInt).over(wDoc), lit(0L))
+        coalesce(lead(col("r"), leadOffset(covered)).over(wDoc), lit(0L))
           .as("r2"))
       if (fuseFinal && covered * 2 >= maxLen) {
         // final round by the covered condition: hand the (r, r2) pair

@@ -718,6 +718,30 @@ class GraphSpec extends SparkSpec {
       (4L, 4L) -> 0, (4L, 3L) -> 1, (4L, 2L) -> 2, (4L, 1L) -> 3))
   }
 
+  test("landmarkDistances releases its edge list on every exit") {
+    // the staged result frames are local checkpoints, persisted by
+    // design; anything else still persisted after the call is a leak
+    def leaked(body: => Unit): Seq[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      body
+      spark.sparkContext.getPersistentRDDs
+        .filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }
+        .keys.toSeq
+    }
+    // a graph no other test uses: a plan another test left cached would
+    // be reused, and this call would persist nothing new to observe
+    val e0 = Seq((101L, 102L), (102L, 103L), (103L, 104L), (104L, 105L))
+    def run(seeds: Seq[Long], maxHops: Int): Unit = {
+      val edges = (e0 ++ e0.map(_.swap)).toDF("s", "d")
+        .filter(col("s") =!= lit(-maxHops.toLong)) // a fresh plan per call
+      Graph.landmarkDistances(edges, "s", "d", seeds.toDF("node"), maxHops)
+        .collect(); ()
+    }
+    assert(leaked(run(Seq.empty, 3)).isEmpty, "empty seeds")
+    assert(leaked(run(Seq(101L), 10)).isEmpty, "empty frontier")
+    assert(leaked(run(Seq(101L), 2)).isEmpty, "hop cap reached")
+  }
+
   test("landmarkDistances equals per-landmark bfsHops on random graphs") {
     val rnd = new scala.util.Random(41)
     val edges = (0 until 120).map(_ =>

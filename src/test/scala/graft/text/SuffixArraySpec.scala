@@ -36,6 +36,13 @@ class SuffixArraySpec extends SparkSpec {
     (5L, "over the lazy dog the quick")   // internal overlaps with 0
   )
 
+  test("a doubling span past lead()'s Int offset fails loudly") {
+    assert(SuffixArray.leadOffset(Int.MaxValue.toLong) === Int.MaxValue)
+    intercept[IllegalArgumentException] {
+      SuffixArray.leadOffset(Int.MaxValue.toLong + 1L)
+    }
+  }
+
   test("suffixArray matches brute-force lexicographic suffix order") {
     val df = corpus.toDF("doc_id", "text")
     val got = SuffixArray.suffixArray(df, "doc_id", "text")
